@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.util.Checkpoints
+
 /** Tiny pattern-match combinator layer over a property graph — the Spark
   * re-expression of the reference's physical operator algebra (SURVEY.md
   * §2.1): NodeScan/RelScan (label/type-pruned scans,
@@ -173,21 +175,20 @@ final case class PatternMatch(nodes: DataFrame, edges: DataFrame) {
     // already a shallow materialized leaf, so unioning them costs no extra
     // job — re-checkpointing the union every round (the previous shape) paid
     // one full materialization pass per BFS level for data already resident
-    var reached = starts
-      .select(col("__sp_start"), col("__sp_start").as("__sp_end"), lit(0L).as("__sp_len"))
-      .localCheckpoint(true)
+    var reached = Checkpoints.checkpoint(starts
+      .select(col("__sp_start"), col("__sp_start").as("__sp_end"), lit(0L).as("__sp_len")))
     var frontier = reached
     var k = 1
     var exhausted = false
     while (k <= maxHops && !exhausted) {
-      val next = frontier.join(e, col("__sp_end") === col("__sp_src"))
+      val next = Checkpoints.checkpoint(frontier.join(e, col("__sp_end") === col("__sp_src"))
         .select(col("__sp_start"), col("__sp_dst").as("__sp_end"), lit(k.toLong).as("__sp_len"))
         .distinct()
         .join(reached.select(col("__sp_start"), col("__sp_end")),
-          Seq("__sp_start", "__sp_end"), "left_anti")
-        .localCheckpoint(true)
+          Seq("__sp_start", "__sp_end"), "left_anti"))
       exhausted = next.isEmpty
-      if (!exhausted) {
+      if (exhausted) Checkpoints.release(next)
+      else {
         reached = reached.unionByName(next)
         frontier = next
       }

@@ -98,15 +98,8 @@ object Canonicalize {
     // the dictionary stars — the bulk of the alias graph's edges — are
     // contracted before iteration (runSeeded); CC rounds touch only the
     // surface-residual edges, a per-round volume cut that matters once the
-    // dictionary outgrows the per-round fixed cost. GRAFT_CANON_SEEDED=0 is
-    // the A/B escape hatch back to whole-graph iteration.
-    val comps =
-      if (sys.env.get("GRAFT_CANON_SEEDED").contains("0"))
-        ConnectedComponents.run(
-          edges.unionByName(dictSeeds(dict).select(col("id").as("src"), col("root").as("dst")))
-            .where(col("src") =!= col("dst")).distinct())
-      else
-        ConnectedComponents.runSeeded(edges, dictSeeds(dict))
+    // dictionary outgrows the per-round fixed cost.
+    val comps = ConnectedComponents.runSeeded(edges, dictSeeds(dict))
     // no distinct: names feeds only canonMap's per-component min(struct) —
     // a multiplicity-blind aggregate — so deduping the union first was one
     // extra vocabulary-wide shuffle for an identical result (idNames() keeps

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.util.Checkpoints
+
 /** Connected components over an undirected edge table via the alternating
   * large-star / small-star algorithm (Kiveris et al., "Connected Components
   * in MapReduce and Beyond", SoCC'14) expressed as Dataset self-joins —
@@ -15,7 +17,7 @@ import org.apache.spark.storage.StorageLevel
   *    shuffle (a 10⁸-degree hub contributes one row per input partition);
   *  - the propagate join re-keys on node id; AQE skew-join splitting is on
   *    in the session so a hot post-agg join key is split at runtime;
-  *  - each round persists + cuts lineage (the plans would otherwise grow
+  *  - each round checkpoints + cuts lineage (the plans would otherwise grow
   *    exponentially across iterations and re-execute from the source).
   *
   * Replaces the reference's driver-side entity clustering (the reference has
@@ -31,35 +33,32 @@ object ConnectedComponents {
     */
   def run(edges: DataFrame, maxIter: Int = 40): DataFrame = {
     val spark = edges.sparkSession
-    var e = edges.select(col("src").cast("long"), col("dst").cast("long"))
+    var e = Checkpoints.checkpoint(edges.select(col("src").cast("long"), col("dst").cast("long"))
       .where(col("src") =!= col("dst"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .distinct())
     var converged = false
     var iter = 0
     // Empty graph: nothing to iterate AND nothing to emit (run()'s contract
     // covers ids occurring in edges — there are none). The seeded pipeline
     // path hits this whenever the dictionary pre-resolves every observed
     // surface: without the short-circuit it would still pay a full
-    // large∘small round + checkpoint + re-signature on zero rows.
-    // count(), not the old pre-loop signature aggregate: one pass is still
-    // needed here — it is what populates e's persist before the first round
-    // (a limit-1 probe would materialize one partition and leave the round
-    // to re-run the distinct's map stage) — but the signature arithmetic on
-    // it bought nothing: the convergence compare is seeded by the sentinel
-    // below (round 1 can never match it, and the star-set fixpoint check
-    // already stops single-round graphs without a confirm round).
-    if (e.count() == 0L) {
-      e.unpersist(false)
+    // large∘small round + checkpoint + re-signature on zero rows. No
+    // pre-loop signature is needed: the convergence compare is seeded by the
+    // sentinel below (round 1 can never match it, and the star-set fixpoint
+    // check already stops single-round graphs without a confirm round).
+    if (e.isEmpty) {
+      Checkpoints.release(e)
       return spark.range(0)
         .select(col("id"), col("id").as("component"))
     }
     var prevSig: (Long, String, Long) = (-1L, "", -1L)
     while (!converged && iter < maxIter) {
-      // one materialization per round: localCheckpoint(eager) computes the
+      // one materialization per round: the eager checkpoint computes the
       // large-star∘small-star composition AND truncates lineage so round N's
       // plan doesn't embed rounds 0..N-1 (at cluster scale: reliable
-      // checkpoint dir instead).
+      // checkpoint dir instead). Only the latest round stays resident: the
+      // previous one is released once `next` is materialized, and the last
+      // one is what the returned plan reads.
       //
       // largeStar's output is persisted (lazily — the round's one job
       // populates it) because smallStar consumes it in TWO subtrees (the
@@ -73,7 +72,7 @@ object ConnectedComponents {
       // copy of an edge-set-sized intermediate, released right after the
       // round materializes.
       val ls = largeStar(e).persist(StorageLevel.MEMORY_AND_DISK)
-      val next = smallStar(ls).localCheckpoint(true)
+      val next = Checkpoints.checkpoint(smallStar(ls))
       ls.unpersist(false)
       // ONE pass over the round's output serves both convergence criteria:
       // the order-independent signature (count + hash sum) and the star-set
@@ -93,11 +92,9 @@ object ConnectedComponents {
       // runs only when the one-edge-per-src precondition holds).
       if (!converged && sig._1 == sig._3 && noSrcIsDst(next)) converged = true
       prevSig = sig
-      e.unpersist(false)
+      Checkpoints.release(e)
       e = next
       iter += 1
-      if (sys.env.contains("GRAFT_CC_VERBOSE"))
-        System.err.println(s"[cc] round $iter edges=${sig._1} converged=$converged")
     }
     // At the fixpoint every edge points from a node to its component min.
     val stars = e.select(col("src").as("id"), col("dst").as("component"))

@@ -11,6 +11,7 @@ import graft.operators.canon.Canonicalize
 import graft.operators.extract.{Extract, MentionDetector}
 import graft.operators.link.EntityLinker
 import graft.sources.TranscriptGen
+import graft.util.{Checkpoints, TempCaches}
 
 /** The end-to-end KG-construction pipeline (SURVEY.md §7.2):
   *
@@ -44,7 +45,7 @@ object Pipeline {
         */
       inputOrdered: Boolean = false,
       /** "all": snapshot every stage (resumable, production default);
-        * "final": persist intermediates in memory/disk cache and snapshot
+        * "final": checkpoint intermediates in memory/disk and snapshot
         * only nodes/edges — the throughput-bench mode (a real cluster
         * checkpoints to scalable storage; a single local disk would
         * otherwise serialize the scaling measurement).
@@ -59,10 +60,6 @@ object Pipeline {
 
   private def stageDir(cfg: Config, s: String) = s"${cfg.workDir}/$s"
 
-  /** Run (or resume) the pipeline. Each stage reads its upstream from the
-    * committed snapshot — not from the in-memory plan — which is what makes
-    * resume exact and keeps per-stage plans short.
-    */
   /** Fail-fast guard: a workDir belongs to exactly one config. Resuming with
     * different generator/linking settings would silently serve the old run's
     * tables as if they were the new config's output.
@@ -87,24 +84,10 @@ object Pipeline {
   private val StageOrder = Seq("transcripts", "mentions", "triples", "linked",
     "canon", "nodes", "edges").zipWithIndex.toMap
 
-  /** Free a final-mode stage's checkpoint blocks once every consumer has
-    * materialized. localCheckpoint persists at the RDD layer (not the SQL
-    * CacheManager), so `df.unpersist` can't reach it — the persisted RDD
-    * lives inside the plan's LogicalRDD leaf. Without these releases every
-    * stage's blocks stay resident until session teardown, and the peak
-    * footprint is the WHOLE pipeline's data instead of ~2 live stages: at
-    * 26M turns that pushed a 48g heap into GC collapse (the 32-core config
-    * burned 8× the 8-core config's CPU on the same stages). A cluster job
-    * has the same obligation — upstream cache blocks are released as the
-    * dataflow passes them, whatever the executor count. Snapshot-mode
-    * stages read back from parquet (no LogicalRDD leaf) — no-op there.
+  /** Run (or resume) the pipeline. Each stage reads its upstream from the
+    * committed snapshot — not from the in-memory plan — which is what makes
+    * resume exact and keeps per-stage plans short.
     */
-  private def releaseStage(dfs: DataFrame*): Unit =
-    dfs.foreach(_.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-      case _ => ()
-    })
-
   def run(spark: SparkSession, cfg: Config): Result = {
     import spark.implicits._
     GraftFunctions.register(spark)
@@ -117,81 +100,39 @@ object Pipeline {
 
     val snapshotAll = cfg.checkpoint != "final"
 
+    def record(name: String, resumed: Boolean = false)(body: => (DataFrame, Long)): DataFrame = {
+      val t0 = System.nanoTime()
+      val (df, rows) = body
+      val wallMs = if (resumed) 0L else (System.nanoTime() - t0) / 1000000
+      stages.synchronized { stages += StageRun(name, rows, wallMs, resumed) }
+      df
+    }
+
     def stage(name: String, partitionBy: Seq[String] = Nil, always: Boolean = false)
         (compute: => DataFrame): DataFrame = {
       val dir = stageDir(cfg, name)
-      if (snapshotAll || always) {
-        if (TableIO.isComplete(dir)) {
-          val df = TableIO.read(spark, dir)
-          // row count comes from the committed manifest — resumed runs keep
-          // real counts in metrics instead of clobbering them with -1
-          stages.synchronized {
-            stages += StageRun(name, TableIO.currentRowCount(dir).getOrElse(-1L), 0L, resumed = true)
-          }
-          df
-        } else {
-          val t0 = System.nanoTime()
-          val snap = TableIO.write(compute, dir, name, partitionBy)
-          stages.synchronized {
-            stages += StageRun(name, snap.rows, (System.nanoTime() - t0) / 1000000, resumed = false)
-          }
-          TableIO.read(spark, dir)
-        }
-      } else {
-        val t0 = System.nanoTime()
-        // materialize AND cut lineage (localCheckpoint ⇒ the downstream
-        // stage sees a shallow LogicalRDD scan, mirroring what the snapshot
-        // path gives for free). Without the cut, every downstream action
-        // re-canonicalizes and re-renders the whole upstream DAG — with the
-        // LSH expression trees that was MINUTES of driver-side plan-string
-        // building per AQE update (observed as nondeterministic 200-300 s
-        // stage stalls in the scaling bench). GRAFT_FINAL_MODE switches the
-        // materialization strategy for A/B measurement. Default is the
-        // DESERIALIZED checkpoint: MEMORY_AND_DISK_SER made every downstream
-        // scan re-pay per-row deserialization — canon reads linked 2-3×, so
-        // at 2 cores the SER tax dominated the stage (bench r5 profile:
-        // canon 31.4 s @2 SER vs ~12 s deserialized). Rows already stored as
-        // compact UnsafeRows; releaseStage() caps residency at ~2 live
-        // stages, which is what made SER's heap headroom unnecessary.
-        val df = sys.env.getOrElse("GRAFT_FINAL_MODE", "ckpt") match {
-          case "persist" =>
-            val d = compute.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            d.count()
-            d
-          case "ckpt" => compute.localCheckpoint(true)
-          case _ => compute.localCheckpoint(true,
-            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-        }
-        val rows = df.count()
-        stages.synchronized {
-          stages += StageRun(name, rows, (System.nanoTime() - t0) / 1000000, resumed = false)
-        }
-        df
+      // final mode: checkpoint in memory instead of snapshotting. The lineage
+      // cut mirrors what the snapshot path gives for free — without it every
+      // downstream action re-canonicalizes and re-renders the whole upstream
+      // DAG (with the LSH expression trees that was minutes of driver-side
+      // plan-string building per AQE update in the scaling bench). The
+      // checkpoint is deserialized: a SER level made every downstream scan
+      // re-pay per-row deserialization (canon reads linked 2-3×; bench r5:
+      // canon 31.4 s @2 cores SER vs ~12 s deserialized), and the releases
+      // below cap residency at ~2 live stages, so SER's heap headroom buys
+      // nothing.
+      if (!snapshotAll && !always) record(name) {
+        val df = Checkpoints.checkpoint(compute)
+        (df, df.count())
       }
-    }
-
-    /** Run two INDEPENDENT stages concurrently: Spark's scheduler interleaves
-      * the two jobs' tasks, so one stage's straggler tail overlaps the
-      * other's work instead of idling the cluster — a pure utilization win
-      * at high parallelism (at low parallelism the scheduler simply
-      * serializes the ready tasks; A/B'd in StageBench). This is ordinary
-      * multi-threaded job submission on one SparkSession — the supported
-      * Spark concurrency model — not a custom scheduler.
-      */
-    def concurrently(a: => DataFrame, b: => DataFrame): (DataFrame, DataFrame) = {
-      if (sys.env.contains("GRAFT_NO_CONCURRENT_STAGES")) (a, b) // A/B escape
-      else {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        import scala.concurrent.ExecutionContext.Implicits.global
-        val fa = Future(a)
-        val fb = Future(b)
-        // settle BOTH before surfacing either failure: if a fails while b is
-        // mid-write, unwinding immediately would leave b detached, still
-        // writing its checkpoint table against a run that is tearing down
-        val ra = Await.ready(fa, Duration.Inf).value.get
-        val rb = Await.ready(fb, Duration.Inf).value.get
-        (ra.get, rb.get)
+      // row count comes from the committed manifest — resumed runs keep
+      // real counts in metrics instead of clobbering them with -1
+      else if (TableIO.isComplete(dir)) record(name, resumed = true) {
+        (TableIO.read(spark, dir), TableIO.currentRowCount(dir).getOrElse(-1L))
+      }
+      else record(name) {
+        val snap = TableIO.write(compute, dir, name, partitionBy)
+        (TableIO.read(spark, dir), snap.rows)
       }
     }
 
@@ -212,14 +153,10 @@ object Pipeline {
       // stage's cost is the row count (parquet metadata scan); the actual
       // column reads happen inside S1/S2, which scan the source table
       // directly — no second copy of the corpus in checkpoint storage.
-      case Some(p) if cfg.inputOrdered =>
-        val t0 = System.nanoTime()
+      case Some(p) if cfg.inputOrdered => record("transcripts") {
         val df = spark.read.parquet(p)
-        val rows = df.count()
-        stages.synchronized {
-          stages += StageRun("transcripts", rows, (System.nanoTime() - t0) / 1000000, resumed = false)
-        }
-        df
+        (df, df.count())
+      }
       case _ => stage("transcripts") {
         cfg.transcriptsPath match {
           case Some(p) => spark.read.parquet(p)
@@ -246,27 +183,27 @@ object Pipeline {
         new MentionDetector.FileIndex(gazPath)
       else MentionDetector.writeIndexFile(TranscriptGen.gazetteerDs(spark, cfg.gen), gazPath)
     }
-    val (mentionsDf, triplesDf) = concurrently(
+    val (mentionsDf, triplesDf) = Checkpoints.both(
       stage("mentions") { Extract.mentions(turns, gazetteer).toDF() },
       stage("triples") { Extract.triples(turns).toDF() })
     // transcripts fed only S1/S2; mentions is a terminal output table
-    releaseStage(transcripts, mentionsDf)
+    Checkpoints.release(transcripts, mentionsDf)
 
     // S3 — entity linking (broadcast joins only on the big side).
     val linkedDf = stage("linked") {
       EntityLinker.link(triplesDf.as[RawTriple], dict, cfg.useLsh).toDF()
     }
-    releaseStage(triplesDf)
+    Checkpoints.release(triplesDf)
 
     // S4 — connected-components canonicalization.
     val canonDf = stage("canon") {
       Canonicalize(linkedDf.as[LinkedTriple], dict).toDF()
     }
-    releaseStage(linkedDf)
+    Checkpoints.release(linkedDf)
     // Canonicalize tracks its vocabulary-sized intermediates (sides, cmap,
     // CC contract map) in TempCaches; the canon checkpoint above is the last
     // consumer, so drop them before S5's corpus-wide jobs need the memory.
-    graft.util.TempCaches.release(spark)
+    TempCaches.release(spark)
 
     // S5 — graph materialization; edges partitioned by rel_type (the Spark
     // analog of the reference's typeRelMap scan index).
@@ -274,10 +211,10 @@ object Pipeline {
     val types = dict.select(col("canonical_name").as("canon_name"), col("entity_type")).distinct()
     lazy val graph = Materialize.graph(canonTyped, Some(types))
     // S5a ∥ S5b — node and edge tables both derive from canon only
-    concurrently(
+    Checkpoints.both(
       stage("nodes", always = true) { graph.nodes },
       stage("edges", partitionBy = Seq("rel_type"), always = true) { graph.edges })
-    releaseStage(canonDf)
+    Checkpoints.release(canonDf)
     dict.unpersist(false)
 
     val result = Result(cfg.workDir,

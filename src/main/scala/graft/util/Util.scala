@@ -110,6 +110,69 @@ object TempCaches {
   }
 }
 
+/** The one way to materialize an intermediate, free it, and overlap two
+  * independent builds — shared by the pipeline's stage boundaries, the
+  * serving graph cache and the CC rounds.
+  */
+object Checkpoints {
+  import org.apache.spark.sql.DataFrame
+  import org.apache.spark.sql.execution.LogicalRDD
+
+  /** Materialize AND cut lineage: an eager `localCheckpoint` (deserialized,
+    * MEMORY_AND_DISK). Downstream plans see a shallow LogicalRDD scan instead
+    * of re-canonicalizing and re-rendering the whole upstream DAG on every
+    * action and AQE update.
+    */
+  def checkpoint(df: DataFrame): DataFrame = df.localCheckpoint(true)
+
+  /** Free checkpoint blocks once every consumer has materialized. Unreleased,
+    * they stay resident until session teardown and the peak footprint is the
+    * whole pipeline's data instead of ~2 live stages (at 26M turns that
+    * pushed a 48g heap into GC collapse).
+    * localCheckpoint persists at the RDD layer, not in the SQL CacheManager,
+    * so `Dataset.unpersist` can't reach it — the persisted RDD lives in the
+    * plan's LogicalRDD leaves. Frames read back from storage have no such
+    * leaf: a no-op there.
+    */
+  def release(dfs: DataFrame*): Unit =
+    dfs.foreach(_.queryExecution.analyzed.foreach {
+      case lr: LogicalRDD => lr.rdd.unpersist(false)
+      case _ => ()
+    })
+
+  /** Run two INDEPENDENT builds concurrently: Spark's scheduler interleaves
+    * the two jobs' tasks, so one side's straggler tail overlaps the other's
+    * work (ordinary multi-threaded job submission on one session). Both
+    * sides settle before either failure surfaces — a side still writing
+    * must not be left detached — and if one side fails, every Dataset the
+    * other side returned (alone or in a tuple) is released before the
+    * failure is rethrown.
+    */
+  def both[A, B](a: => A, b: => B): (A, B) = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val fa = Future(a)
+    val fb = Future(b)
+    val ra = Await.ready(fa, Duration.Inf).value.get
+    val rb = Await.ready(fb, Duration.Inf).value.get
+    (ra, rb) match {
+      case (scala.util.Success(x), scala.util.Success(y)) => (x, y)
+      case _ =>
+        (ra.toOption ++ rb.toOption).foreach(releaseAll)
+        val failures = (ra.failed.toOption ++ rb.failed.toOption).toSeq
+        failures.tail.foreach(failures.head.addSuppressed)
+        throw failures.head
+    }
+  }
+
+  private def releaseAll(x: Any): Unit = x match {
+    case ds: org.apache.spark.sql.Dataset[_] => release(ds.toDF())
+    case p: Product => p.productIterator.foreach(releaseAll)
+    case _ => ()
+  }
+}
+
 object Sessions {
   /** Local session with the settings every entry point shares. Parallelism is
     * the scale knob used for the two-cluster-size scaling evidence
@@ -117,12 +180,7 @@ object Sessions {
     */
   def local(cores: Int, shufflePartitions: Int = -1, appName: String = "graft",
       localDir: Option[String] = None): SparkSession = {
-    // default: shuffle partitions = cores × GRAFT_SHUFFLE_FACTOR (default 1).
-    // A factor > 1 trades scheduling overhead for straggler/tail balance —
-    // AQE still coalesces small exchanges, so the factor mainly bounds the
-    // LARGEST task of skew-prone stages
-    val factor = sys.env.getOrElse("GRAFT_SHUFFLE_FACTOR", "1").toInt
-    val sp = if (shufflePartitions > 0) shufflePartitions else cores * factor
+    val sp = if (shufflePartitions > 0) shufflePartitions else cores
     val b = SparkSession.builder()
       .master(s"local[$cores]")
       .appName(appName)

@@ -37,6 +37,16 @@ class ConnectedComponentsSpec extends SparkTestBase {
     check((0L until 40L).map(i => (i, i + 1)))
   }
 
+  test("only the final round's checkpoint stays resident") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    // a chain needs several rounds, each materialized by a checkpoint
+    val comp = ConnectedComponents.run((0L until 64L).map(i => (i, i + 1)).toDF("src", "dst"))
+    assert(comp.count() == 65)
+    val added = sc.getPersistentRDDs.keySet.toSet -- before
+    assert(added.size <= 1, s"round checkpoints left pinned: $added")
+  }
+
   test("star graph with high-degree hub") {
     check((1L to 200L).map(i => (0L, i)))
   }

@@ -47,6 +47,27 @@ class PipelineSpec extends SparkTestBase {
     rm(dir)
   }
 
+  test("final mode builds the same graph as snapshot mode and releases every checkpoint") {
+    val sc = spark.sparkContext
+    val allDir = tmpDir("graft-all")
+    val finalDir = tmpDir("graft-final")
+    Pipeline.run(spark, cfg(allDir))
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val r = Pipeline.run(spark, cfg(finalDir).copy(checkpoint = "final"))
+    val added = sc.getPersistentRDDs.keySet.toSet -- before
+    assert(added.isEmpty, s"final mode left persistent RDDs behind: $added")
+    assert(r.stages.map(_.stage) ==
+      Seq("transcripts", "mentions", "triples", "linked", "canon", "nodes", "edges"))
+    assert(r.stages.forall(s => !s.resumed && s.rows > 0), r.stages)
+    def multiset(dir: String, table: String) =
+      TableIO.read(spark, s"$dir/$table").collect().toSeq
+        .map(_.toSeq).groupBy(identity).view.mapValues(_.size).toMap
+    Seq("nodes", "edges").foreach { t =>
+      assert(multiset(allDir, t) == multiset(finalDir, t), s"$t differs between modes")
+    }
+    rm(allDir); rm(finalDir)
+  }
+
   test("killed run resumes: committed stages are skipped, outputs identical") {
     val dir = tmpDir("graft-resume")
     val c = cfg(dir)
